@@ -49,7 +49,7 @@ def skyline_partition_stats(
     """(pid, local_size, survivors) per non-empty spatial partition.
 
     One exchange on pid for the local phase (the reference's keyBy); the
-    global merge is the parallel broadcast-verify from
+    global merge is the parallel verify from
     :func:`..skyline._merge_survivors` (it preserves every column, so the
     ``pid`` provenance tag survives the merge).  The reference merges on a
     single thread (``FlinkSkyline.java:548-566``) — exactly the bottleneck

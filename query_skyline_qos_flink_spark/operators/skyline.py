@@ -22,22 +22,42 @@ join: by shape.
   sorts all distinct d0 values) -> broadcast semi-join back.  Grouped:
   the prefix-min window partitions by the group keys (parallel by key).
 
-* **d >= 3 — two-phase with broadcast-verify merge.**
+* **d >= 3 — two-phase: local pass, then one verify.**
   Phase 1 needs no shuffle at all: ``mapInPandas`` computes a local
   skyline per *input partition* (Arrow-batched, incremental), so only
-  local-skyline survivors ever hit the wire.  The merge then:
-  - tree-merges one round if survivors are huge (bounds any single task);
-  - **broadcast-verifies**: ship the survivor dim-matrix to every task and
-    drop dominated rows in parallel.  This replaces the reference's
-    single-threaded global BNL — the PDF's own bottleneck (§5.5) — with an
-    embarrassingly parallel pass, valid because every non-survivor is
-    dominated by some survivor (transitivity).
+  local-skyline survivors ever hit the wire.  ``_merge_survivors``
+  tree-merges one round if survivors are past ``_VERIFY_MAX_ROWS``
+  (bounds any single task), then hands them to the verify planner.
+
+**The verify planner** (``_verify_candidates``) is the one global merge
+of the family — skyline, skyband, top_dominating and skycube's
+full-space skyline.  It takes a persisted candidate set of ``n`` rows and
+a kernel: a row survives while fewer than ``k`` candidates strictly
+dominate it (``_Dominance`` is the skyline, ``k = 1``; ``_DominatorCount``
+carries exact dominator counts for the k-skyband).  The candidate set
+contains every dominator that matters (transitivity; kernel facts B1-B3
+for counts), so verifying candidates against candidates is exact.  It
+replaces the reference's single-threaded global BNL — the PDF's own
+bottleneck (§5.5).  One tier runs, chosen by ``n``:
+
+* **driver** (``n <= _DRIVER_VERIFY_MAX_ROWS``): collect once, run the
+  kernel's self form (``skyline_mask`` / ``_count_dominators_vs(a, a)``)
+  and return a local relation plus the collected Arrow table;
+* **broadcast** (``n <= _VERIFY_MAX_ROWS``): ship the candidate
+  dim-matrix (d doubles/row) to every task and count in parallel — the
+  skyline kernel sum-sorts the matrix and re-qualifies its f32 and
+  exact-sum fast paths per batch;
+* **chunked** (larger): split the candidates into ``<= _VERIFY_MAX_ROWS``
+  uniform-row-key chunks (pinned by ``localCheckpoint``) and run one
+  broadcast pass per chunk, carrying a running count and dropping a row
+  once it reaches ``k`` (counts only grow and are additive over chunks).
+  Every ``_TREE_FANOUT`` passes the running frame is checkpointed, so no
+  task holds more than ``_TREE_FANOUT`` chunk broadcasts and no candidate
+  volume raises.
 
 At 100 TB: phase 1 parallelism = input splits; shuffle volume is
-``O(sum of local skyline sizes)``, not ``O(input)``; the broadcast is dims
-only (d doubles/row) and gated by ``_VERIFY_MAX_ROWS`` with a tree-merge
-fallback.  No driver-side collect of anything larger than the survivor
-dim-matrix.
+``O(sum of local skyline sizes)``, not ``O(input)``; no driver-side
+collect of anything larger than a ``_VERIFY_MAX_ROWS``-row dim-matrix.
 
 MAX dimensions are handled by negation; duplicates/ties are retained
 (SURVEY.md §1.1); rows with NULL/NaN in any skyline dimension are excluded
@@ -51,18 +71,25 @@ from collections.abc import Iterator, Sequence
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window, functions as F
+from pyspark.sql.types import LongType, StructField, StructType
 
+from .caching import checkpoint_rotate, release_local_checkpoint
 from .caching import persist_balanced as _persist_balanced
 from .caching import persist_bounded as _persist
-from .caching import release_local_checkpoint
 from .fanout import fanout_narrow_scan as _fanout
 from .joins import null_safe_semi_join
-from .skyline_kernel import dominated_mask_vs_sorted, exact_f32, skyline_mask, sums_exact
+from .skyline_kernel import (
+    _count_dominators_vs,
+    dominated_mask_vs_sorted,
+    exact_f32,
+    skyline_mask,
+    sums_exact,
+)
 
 _PREP = "__sk_"
 
-# Max survivor rows for the broadcast-verify merge; above this, run a
-# tree-merge round first (and as a last resort a single-task merge).
+# Max candidate rows for the broadcast verify tier, and the chunk size of
+# the chunked tier past it (see the module docstring).
 _VERIFY_MAX_ROWS = 400_000
 # Candidate sets at or below this row count finish DRIVER-side: the same
 # chunked numpy kernels the distributed verify broadcasts run once on the
@@ -74,8 +101,7 @@ _VERIFY_MAX_ROWS = 400_000
 # plus a python-worker broadcast pass per call — pure fixed latency at
 # bench scale and wasted scheduling at cluster scale (guide §1.2: remove
 # passes before tuning them).  Results are identical: same kernel, same
-# duplicate-retention policy (the skyline-merge monoid).  Larger sets keep
-# the existing broadcast / tree-merge / chunked paths unchanged.
+# duplicate-retention policy (the skyline-merge monoid).
 _DRIVER_VERIFY_MAX_ROWS = 16_384
 # Whole-input driver fast path for the filter-then-verify family
 # (skyband, top_dominating, reverse/k-dominant, prob_skyline): when the
@@ -129,6 +155,10 @@ def _collect_small_input(prepped: DataFrame, cols: Sequence[str]):
     if tbl.num_rows > _DRIVER_INPUT_MAX_ROWS:
         return None
     return tbl
+
+
+# Partitions of the skyline tree-merge round, and the chunked verify
+# tier's checkpoint cadence (passes, hence broadcasts held per task).
 _TREE_FANOUT = 32
 # Max 2-D survivor rows to broadcast into the final semi-join (row = two
 # doubles + group keys; 2M rows ≈ tens of MB — well inside executor memory,
@@ -481,75 +511,6 @@ def _skyline_2d_relational(
     return null_safe_semi_join(prepped, surv, eq_cols=[d0, d1], null_safe_cols=keys)
 
 
-def _broadcast_verify(
-    cur: DataFrame, prep_cols: list[str], ref: DataFrame | None = None
-) -> DataFrame:
-    """Parallel global merge: every task checks its rows against the full
-    survivor dim-matrix (self/duplicate pairs fail the strict test).
-
-    ``ref`` (default: ``cur`` itself) supplies the reference matrix; passing
-    a known skyline lets callers re-verify an arbitrary row set against it
-    — e.g. bench.py's 1M sizecheck runs the WHOLE input through this with
-    the distributed result as ``ref``: the surviving row count equals the
-    result count iff the result is exactly the skyline (a false survivor
-    would be dominated and drop; a missed survivor would pass and add)."""
-    spark = cur.sparkSession
-    self_ref = ref is None
-    dims_pdf = (cur if self_ref else ref).select(*prep_cols).toPandas()
-    arr = np.ascontiguousarray(dims_pdf.to_numpy(dtype=np.float64))
-    ssum = arr.sum(axis=1)
-    order = np.argsort(ssum, kind="stable")
-    arr, ssum = arr[order], ssum[order]
-    exact = sums_exact(arr)
-    # exact f32 fast path (integer-domain data): halves comparison traffic.
-    # When ref IS the candidate set (self_ref), the flags computed from
-    # ``arr`` cover the candidates too, so the f32 matrix can be broadcast
-    # directly.  When ref is an EXTERNAL reference (chunked merge, verify
-    # probes), the candidates may not share ref's exactness — deciding the
-    # fast paths from ref alone corrupts results (r10 ADVICE: an f32-exact
-    # ref chunk vs a non-f32-representable candidate like 0.1 reports
-    # domination that f64 denies) — so broadcast the f64 matrix plus the
-    # ref-side eligibility flags and re-qualify PER CANDIDATE BATCH below.
-    f32 = exact_f32(arr)
-    if self_ref and f32 is not None:
-        arr = np.ascontiguousarray(f32)
-    bc = spark.sparkContext.broadcast((arr, ssum, f32 is not None, exact, self_ref))
-
-    def verify(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        sky, sky_sum, ref_f32_ok, ref_exact, self_mode = bc.value
-        sky32 = sky if sky.dtype == np.float32 else None
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            pts = pdf[prep_cols].to_numpy(dtype=np.float64)
-            psum = pts.sum(axis=1)
-            if self_mode:
-                # candidates are ref rows: ref-wide flags already cover them
-                cand, work, exact_mode = (
-                    pts.astype(np.float32) if ref_f32_ok else pts, sky, ref_exact
-                )
-            else:
-                # fast paths only when this batch qualifies too: exact-sum
-                # mode needs BOTH sides' computed sums exact, the f32 kernel
-                # needs both sides losslessly representable (the general
-                # f64 path is exact for arbitrary floats, so disqualifying
-                # a batch costs speed, never correctness)
-                exact_mode = ref_exact and sums_exact(pts)
-                cand32 = exact_f32(pts) if ref_f32_ok else None
-                if cand32 is not None:
-                    if sky32 is None:
-                        sky32 = sky.astype(np.float32)
-                    cand, work = cand32, sky32
-                else:
-                    cand, work = pts, sky
-            dom = dominated_mask_vs_sorted(cand, psum, work, sky_sum, exact=exact_mode)
-            out = pdf.loc[~dom]
-            if not out.empty:
-                yield out
-
-    return cur.mapInPandas(verify, schema=cur.schema)
-
-
 def skyline(
     df: DataFrame,
     dims: Sequence,
@@ -597,48 +558,113 @@ def skyline(
 
 
 def _merge_survivors(local_df: DataFrame, prep_cols: list[str]) -> DataFrame:
-    """Global merge of local-skyline survivors: broadcast-verify when the
-    survivor set is bounded, tree-merge round (then chunked distributed
-    verify) otherwise."""
-    local = _local_skyline_iter(prep_cols)
+    """Global merge of local-skyline survivors: one tree-merge round when
+    the survivor set is past the broadcast bound (it bounds any single
+    task's input), then :func:`_verify_candidates`."""
     cur = _persist(local_df)
     n = cur.count()
     if n > _VERIFY_MAX_ROWS:
+        local = _local_skyline_iter(prep_cols)
         cur = _persist(cur.repartition(_TREE_FANOUT).mapInPandas(local, schema=cur.schema))
         n = cur.count()
-        if n > _VERIFY_MAX_ROWS:
-            return _chunked_broadcast_verify(cur, prep_cols, n)
-    if n <= _DRIVER_VERIFY_MAX_ROWS:
-        # driver-side merge: the survivor matrix this small would be
-        # collected for the broadcast anyway — run the identical kernel
-        # once on the driver and return a local relation, saving the
-        # dims-collect job and the python-worker verify pass
-        return _driver_verify_local(cur, prep_cols)
-    return _broadcast_verify(cur, prep_cols)
+    return _verify_candidates(cur, n, prep_cols, _Dominance)[0]
 
 
-def _driver_verify_local(cur: DataFrame, prep_cols: list[str]) -> DataFrame:
-    """Collect the (bounded, cached) survivor frame once and finish the
-    global merge with the same local kernel the distributed verify ships:
-    ``SKY(survivors)`` via :func:`skyline_mask` equals the verify-vs-self
-    result by the skyline-merge monoid (self/duplicate pairs fail the
-    strict test in both).  The Arrow round-trip preserves Spark types
-    exactly (see :func:`_keyed_candidates`)."""
-    import pyarrow as pa
+class _Dominance:
+    """Skyline verify kernel (``k = 1``): a row counts 1 against a
+    reference when some reference row strictly dominates it.  Self and
+    duplicate pairs fail the strict test, so ties are retained."""
 
-    tbl = cur.toArrow()
-    if tbl.num_rows == 0:
-        return cur
+    count_col = None
+
+    @staticmethod
+    def self_counts(arr: np.ndarray) -> np.ndarray:
+        return ~skyline_mask(arr)
+
+    @staticmethod
+    def prepare(ref: np.ndarray):
+        ssum = ref.sum(axis=1)
+        order = np.argsort(ssum, kind="stable")
+        ref = ref[order]
+        return ref, exact_f32(ref), ssum[order], sums_exact(ref)
+
+    @staticmethod
+    def counts(pts: np.ndarray, payload) -> np.ndarray:
+        """Sum-sorted dominance pass.  The exact f32 and exact-sum fast
+        paths re-qualify per candidate batch: a reference that qualifies
+        says nothing about candidates outside it (an f32-exact ref chunk
+        vs a candidate like 0.1 reports a domination that f64 denies, r10
+        ADVICE).  Disqualifying a batch costs speed, never correctness."""
+        sky, sky32, sky_sum, exact = payload
+        cand32 = None if sky32 is None else exact_f32(pts)
+        cand, work = (pts, sky) if cand32 is None else (cand32, sky32)
+        exact = exact and sums_exact(pts)
+        return dominated_mask_vs_sorted(cand, pts.sum(axis=1), work, sky_sum, exact=exact)
+
+
+class _DominatorCount:
+    """Skyband verify kernel: the exact number of reference rows that
+    strictly dominate each row, carried in ``count_col``.  Counts are
+    additive over any partition of the reference (property-tested)."""
+
+    count_col = "__vcnt"
+
+    @staticmethod
+    def self_counts(arr: np.ndarray) -> np.ndarray:
+        return _count_dominators_vs(arr, arr)
+
+    @staticmethod
+    def prepare(ref: np.ndarray) -> np.ndarray:
+        return ref
+
+    counts = staticmethod(_count_dominators_vs)
+
+
+def _verify_pass(
+    cur: DataFrame, prep_cols: list[str], kernel, k: int, ref: DataFrame
+) -> DataFrame:
+    """One broadcast verify pass: ship ``ref``'s dim matrix to every task,
+    add each row's ``kernel`` count against it (to the running count when
+    ``cur`` already carries one) and drop the rows whose count reaches
+    ``k``.
+
+    With ``ref`` a known skyline this re-verifies an arbitrary row set:
+    bench.py's 1M sizecheck runs the WHOLE input through it, and the
+    surviving row count equals the result count iff the result is exactly
+    the skyline (a false survivor would be dominated and drop; a missed
+    survivor would pass and add)."""
     arr = np.ascontiguousarray(
-        tbl.select(prep_cols).to_pandas().to_numpy(dtype=np.float64)
+        ref.select(*prep_cols).toPandas().to_numpy(dtype=np.float64)
     )
-    mask = skyline_mask(arr)
-    out_tbl = tbl if mask.all() else tbl.filter(pa.array(mask))
-    return cur.sparkSession.createDataFrame(out_tbl)
+    bc = cur.sparkSession.sparkContext.broadcast(kernel.prepare(arr))
+    col = kernel.count_col
+    running = col in cur.columns
+    schema = cur.schema
+    if col is not None and not running:
+        # fresh StructType: .add() on DataFrame.schema would mutate the
+        # frame's CACHED StructType in place
+        schema = StructType(list(schema.fields) + [StructField(col, LongType())])
+
+    def verify(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        payload = bc.value
+        for pdf in batches:
+            if pdf.empty:
+                continue
+            cnt = kernel.counts(pdf[prep_cols].to_numpy(dtype=np.float64), payload)
+            if running:
+                cnt = cnt + pdf[col].to_numpy()
+            keep = cnt < k
+            out = pdf.loc[keep]
+            if col is not None:
+                out = out.assign(**{col: cnt[keep]})
+            if not out.empty:
+                yield out
+
+    return cur.mapInPandas(verify, schema=schema)
 
 
 def _uniform_chunk_col(n_chunks: int) -> Column:
-    """Uniform chunk id for the distributed-merge passes: consecutive
+    """Uniform chunk id for the chunked verify tier: consecutive
     ``monotonically_increasing_id`` values within each task cycle
     round-robin through the chunks, so every chunk holds at most
     ``ceil(rows_in_task / n_chunks)`` rows per task — bounded by
@@ -652,69 +678,67 @@ def _uniform_chunk_col(n_chunks: int) -> Column:
     co-locates an all-duplicates corpus (a value-hash-bucketed
     ``row_number`` window splits them, but its window partition IS the
     duplicate group — single-task at exactly the adversarial input).
-    Callers therefore MUST pin the frame carrying this column with an
+    The caller therefore pins the frame carrying this column with an
     eager ``localCheckpoint`` (not a plain ``persist``) before reading
     it more than once: a checkpoint freezes the materialized assignment,
     so a lost/evicted block FAILS the job (fail-stop) instead of
     silently recomputing a different assignment that could overlap or
     miss rows across chunks (r11 ADVICE).  On a multi-node deployment
     where executor loss must be survivable, substitute a reliable
-    ``checkpoint()`` (HDFS-backed) at the same two call sites — the
-    lifetime contract is identical."""
+    ``checkpoint()`` (HDFS-backed) at that call site — the lifetime
+    contract is identical."""
     return F.pmod(F.monotonically_increasing_id(), F.lit(n_chunks))
 
 
-def _chunked_broadcast_verify(
-    cur: DataFrame, prep_cols: list[str], n: int
-) -> DataFrame:
-    """Distributed global merge for survivor volumes past the broadcast
-    bound: verify the candidate set against ``<= _VERIFY_MAX_ROWS``-row
-    hash-chunks of ITSELF, one broadcast-verify pass per chunk, each pass
-    dropping the rows that chunk dominates.
+def _verify_candidates(
+    cur: DataFrame, n: int, prep_cols: list[str], kernel, k: int = 1
+) -> tuple[DataFrame, object]:
+    """The skyline family's one candidate-vs-candidate verify: keep the
+    rows of the persisted candidate frame ``cur`` (``n`` rows, measured
+    by the caller) whose ``kernel`` count against the whole frame stays
+    below ``k``.  Returns ``(frame, tbl)``: ``tbl`` is the verified Arrow
+    table when the driver tier ran and None otherwise, so callers that
+    need the rows driver-side do not collect them again.  The driver,
+    broadcast and chunked tiers are described in the module docstring.
 
-    A row is a global survivor iff no candidate in ANY chunk strictly
-    dominates it, so progressive filtering (logical AND across passes) is
-    exact; chunk overlap or a row meeting its own chunk is harmless (the
-    strict test never drops a row against itself or a duplicate — the
-    duplicate-retention policy).  Every pass is the same parallel
-    mapInPandas sum-sort-pruned kernel as the bounded path — total work
-    O(n x |skyline|) spread across all cores with O(_VERIFY_MAX_ROWS x d)
-    broadcast and driver memory per pass.  This replaced a
-    ``repartition(1)`` single-task merge that did the identical
-    comparison volume on ONE core: at 10M 4-D anti-correlated points
-    (~1M survivors, measured) the single task ran >10 min while this
-    loop finishes in under a minute.
+    Chunked tier: every reference pull is eager in the loop, and the
+    returned chain references only ``cur`` and the running checkpoint, so
+    the unstable chunk assignment (:func:`_uniform_chunk_col`) is pinned
+    with an eager ``localCheckpoint`` for the loop alone (a ``persist``
+    could be evicted and recomputed with a DIFFERENT assignment —
+    overlap double-counts dominators, a gap undercounts; r11 ADVICE)."""
+    if n <= _DRIVER_VERIFY_MAX_ROWS:
+        import pyarrow as pa
 
-    Chunking uses a uniform row key (:func:`_uniform_chunk_col`), NOT a
-    dim hash: the progressive filter is exact under ANY partition of the
-    reference set (property-tested: chunk composability), so nothing
-    requires duplicate dim-rows to co-locate — and a dim hash would let
-    an adversarial all-duplicates corpus collapse into one oversized
-    chunk.  The row key keeps every chunk near ``n / n_chunks`` by
-    construction.
-
-    The assignment frame's lifetime is the LOOP, not the result: every
-    reference pull (``toPandas`` inside :func:`_broadcast_verify`) runs
-    eagerly in the loop body, and the returned filter chain references
-    only ``cur`` — so the unstable row id is pinned with an eager
-    ``localCheckpoint`` (a plain ``persist`` can be evicted and silently
-    recomputed with a DIFFERENT assignment, over- or under-covering the
-    reference set, r11 ADVICE; a checkpoint is fail-stop) and released
-    as soon as the loop ends."""
+        tbl = cur.toArrow()
+        cnt = kernel.self_counts(
+            np.ascontiguousarray(tbl.select(prep_cols).to_pandas().to_numpy(dtype=np.float64))
+        )
+        keep = cnt < k
+        if not keep.all():
+            tbl = tbl.filter(pa.array(keep))
+        if kernel.count_col is not None:
+            tbl = tbl.append_column(kernel.count_col, pa.array(cnt[keep], pa.int64()))
+        return cur.sparkSession.createDataFrame(tbl), tbl
+    if n <= _VERIFY_MAX_ROWS:
+        return _verify_pass(cur, prep_cols, kernel, k, cur), None
     n_chunks = -(-n // _VERIFY_MAX_ROWS)
     assign = (
         cur.select(*prep_cols)
         .withColumn("__vchunk", _uniform_chunk_col(n_chunks))
         .localCheckpoint(eager=True)
     )
+    out, ckpt = cur, None
     try:
-        out = cur
         for i in range(n_chunks):
-            ref = assign.where(F.col("__vchunk") == i).drop("__vchunk")
-            out = _persist(_broadcast_verify(out, prep_cols, ref=ref))
+            if i and i % _TREE_FANOUT == 0:
+                # bound the broadcasts any one task holds
+                out = ckpt = checkpoint_rotate(out, ckpt)
+            ref = assign.where(F.col("__vchunk") == i)
+            out = _verify_pass(out, prep_cols, kernel, k, ref)
     finally:
         release_local_checkpoint(assign)
-    return out
+    return out, None
 
 
 def skyline_verify_count(df: DataFrame, dims: Sequence, result: DataFrame) -> int:
@@ -730,7 +754,7 @@ def skyline_verify_count(df: DataFrame, dims: Sequence, result: DataFrame) -> in
     of the skyline would be quadratic."""
     prepped, pc = _prep(df, dims)
     ref_prepped, _ = _prep(result, dims)
-    return _broadcast_verify(prepped, pc, ref=ref_prepped).count()
+    return _verify_pass(prepped, pc, _Dominance, 1, ref_prepped).count()
 
 
 def skyline_with_pid(
@@ -822,24 +846,15 @@ def skyband(
     * local per-partition k-skyband via ``mapInPandas`` riding the scan —
       a certified SUPERSET of the global k-skyband (B2), O(n x |band|)
       per partition, only survivors cross the wire;
-    * broadcast-verify: every candidate's dominators are themselves
-      global k-skyband rows (B1) and hence inside the candidate union, so
-      counting dominators against the broadcast candidate matrix is EXACT
-      for true members; for false survivors the same count certifies
-      exclusion (B3: at least k of their dominators are in the union).
-
-    The candidate set is bounded by the ``_VERIFY_MAX_ROWS`` broadcast
-    guard; unlike the skyline there is no tree-merge fallback (dominator
-    COUNTS don't tree-merge), but counts ARE additive over a partition
-    of the candidate union, so volumes past the bound take a chunked
-    counting pipeline (one pass per <=bound-size hash-chunk of the
-    union, running counts accumulated across passes, rows early-dropped
-    the moment their running count reaches ``k`` — counts only grow).
-    Only a union past ``32 x _VERIFY_MAX_ROWS`` (where the stacked chunk
-    broadcasts would stop being a rounding error) still raises."""
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    from .skyline_kernel import _count_dominators_vs, skyband_mask
+    * verify: every candidate's dominators are themselves global
+      k-skyband rows (B1) and hence inside the candidate union, so
+      counting dominators against the union is EXACT for true members;
+      for false survivors the same count certifies exclusion (B3: at
+      least k of their dominators are in the union).  The count runs
+      through :func:`_verify_candidates` (driver, broadcast or chunked
+      tier; counts are additive over chunks of the union, so no union
+      size raises)."""
+    from .skyline_kernel import skyband_mask
 
     if k < 1:
         raise ValueError(f"skyband: k must be >= 1, got {k}")
@@ -877,163 +892,8 @@ def skyband(
             _skyband_local_fn(prep_cols, k), schema=prepped.schema
         )
     )
-    n = phase1.count()
-    if n > _VERIFY_MAX_ROWS:
-        return _chunked_skyband_verify(
-            phase1, prep_cols, k, count_col, out_cols, n
-        )
-    spark = phase1.sparkSession
-    if n <= _DRIVER_VERIFY_MAX_ROWS:
-        # driver-side verify (see _DRIVER_VERIFY_MAX_ROWS): dominator
-        # counts against the candidate union are exact for true members
-        # (B1) and exclusion-certifying for false survivors (B3) whether
-        # the O(m^2) counting block runs broadcast in every task or once
-        # on the driver over the matrix the broadcast would ship anyway.
-        # One collect replaces the dims-collect job + the python-worker
-        # verify pass, and the result re-enters as a local relation.
-        import pyarrow as pa
-
-        tbl = phase1.toArrow()
-        if tbl.num_rows == 0:
-            return phase1.select(*out_cols).withColumn(
-                count_col, F.lit(0).cast("long")
-            )
-        arr = np.ascontiguousarray(
-            tbl.select(prep_cols).to_pandas().to_numpy(dtype=np.float64)
-        )
-        counts = _count_dominators_vs(arr, arr)
-        keep = counts < k
-        out_tbl = (tbl if keep.all() else tbl.filter(pa.array(keep))).append_column(
-            count_col, pa.array(counts[keep], pa.int64())
-        )
-        return spark.createDataFrame(out_tbl).select(*out_cols, count_col)
-    cand_pdf = phase1.select(*prep_cols).toPandas()
-    cand_arr = np.ascontiguousarray(cand_pdf.to_numpy(dtype=np.float64))
-    bc = spark.sparkContext.broadcast(cand_arr)
-
-    # fresh StructType (imported at the top of the function): .add() on
-    # DataFrame.schema would mutate the frame's CACHED StructType in place,
-    # silently corrupting the source frame's python-side schema
-    schema = StructType(list(phase1.schema.fields) + [StructField(count_col, LongType())])
-
-    def verify(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ref = bc.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            pts = pdf[prep_cols].to_numpy(dtype=np.float64)
-            counts = _count_dominators_vs(pts, ref)
-            keep = counts < k
-            out = pdf.loc[keep].copy()
-            if not out.empty:
-                out[count_col] = counts[keep]
-                yield out
-
-    return phase1.mapInPandas(verify, schema=schema).select(*out_cols, count_col)
-
-
-def _chunked_skyband_verify(
-    phase1: DataFrame,
-    prep_cols: list[str],
-    k: int,
-    count_col: str,
-    out_cols: list[str],
-    n: int,
-) -> DataFrame:
-    """Skyband verification for candidate unions past the broadcast bound:
-    dominator counts are ADDITIVE over a partition of the union, so the
-    counting scan becomes one chained pass per ``<= _VERIFY_MAX_ROWS``-row
-    uniform-row-key chunk of the candidates, each pass adding that
-    chunk's dominator counts to the running column and dropping rows the
-    moment the running count reaches ``k`` (counts only grow, so the
-    early drop is exact — B3 certifies such rows are excluded either
-    way).
-
-    The passes chain LAZILY into one streaming mapInPandas pipeline: no
-    intermediate materialization, each worker holds the chunk arrays
-    (total = the whole candidate dim-matrix, n x d doubles) plus one
-    Arrow batch.  That stacked-broadcast total is the scale bound, so a
-    union past ``_TREE_FANOUT x _VERIFY_MAX_ROWS`` rows (~12.8M, >3 GB
-    of float64 matrices per worker at d=4) still raises — at that band
-    volume the query itself is mis-specified (raise k selectivity or
-    pre-filter)."""
-    if n > _TREE_FANOUT * _VERIFY_MAX_ROWS:
-        raise ValueError(
-            f"skyband: candidate union has {n} rows "
-            f"(> {_TREE_FANOUT * _VERIFY_MAX_ROWS}); raise k selectivity "
-            "or partition count"
-        )
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    from .skyline_kernel import _count_dominators_vs
-
-    spark = phase1.sparkSession
-    n_chunks = -(-n // _VERIFY_MAX_ROWS)
-    # Uniform row-key chunks (see _uniform_chunk_col): counts are
-    # additive over ANY partition of the union (property-tested), and the
-    # key bounds every chunk by construction even on an all-duplicates
-    # corpus.  An ascending-coordinate-sum chunk ORDER (strongest
-    # dominators first, maximizing the count-to-k early drop) was A/B
-    # probed at 10M 3-D k=4 and REVERTED with numbers: the prototype's
-    # apparent 1.75x cold win was same-session plan-cache inheritance
-    # (its phase-1 union came from the prior run's persisted plan — its
-    # "cold" beat uniform's warm, the tell); a fresh-session production
-    # run measured 285 s cold / 173 s warm vs uniform's 294 / 177 —
-    # inside noise, not worth the extra quantile pass + tie-bucket
-    # sub-splitting (SCALE.md records both probes).
-    #
-    # The assignment's lifetime is the LOOP: every reference pull below
-    # is eager, and the returned counting chain references only phase1 —
-    # so the unstable row id is pinned with an eager localCheckpoint
-    # (persist could be evicted and silently recomputed with a DIFFERENT
-    # assignment — overlap double-counts dominators, a gap undercounts;
-    # a checkpoint is fail-stop on block loss, r11 ADVICE) and released
-    # as soon as the pulls are done.
-    chunks = (
-        phase1.select(*prep_cols)
-        .withColumn("__vchunk", _uniform_chunk_col(n_chunks))
-        .localCheckpoint(eager=True)
-    )
-    try:
-        refs = []
-        for i in range(n_chunks):
-            # keep only the compact float64 matrix (which the broadcasts
-            # need anyway) — retaining the pandas frames too would double
-            # the driver's peak at the n x d scale bound (r11 review)
-            refs.append(
-                np.ascontiguousarray(
-                    chunks.where(F.col("__vchunk") == i)
-                    .select(*prep_cols)
-                    .toPandas()
-                    .to_numpy(dtype=np.float64)
-                )
-            )
-    finally:
-        release_local_checkpoint(chunks)
-    schema = StructType(
-        list(phase1.schema.fields) + [StructField(count_col, LongType())]
-    )
-    cur = phase1
-    for i, arr in enumerate(refs):
-        bc = spark.sparkContext.broadcast(arr)
-
-        def count_pass(
-            batches: Iterator[pd.DataFrame], bc=bc, first=(i == 0)
-        ) -> Iterator[pd.DataFrame]:
-            ref = bc.value
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                pts = pdf[prep_cols].to_numpy(dtype=np.float64)
-                add = _count_dominators_vs(pts, ref)
-                out = pdf.copy()
-                out[count_col] = add if first else out[count_col].to_numpy() + add
-                out = out.loc[out[count_col] < k]
-                if not out.empty:
-                    yield out
-
-        cur = cur.mapInPandas(count_pass, schema=schema)
-    return cur.select(*out_cols, count_col)
+    band, _ = _verify_candidates(phase1, phase1.count(), prep_cols, _DominatorCount, k)
+    return band.select(*out_cols, F.col(_DominatorCount.count_col).alias(count_col))
 
 
 def _keyed_candidates(spark, cand_tbl) -> DataFrame:
@@ -1068,8 +928,8 @@ def top_dominating(
 
     Scale shape — two scans, no quadratic join:
 
-    1. candidates = the k-skyband (one scan + broadcast-verify, see
-       :func:`skyband`): if p has >= k dominators, each dominator q has
+    1. candidates = the k-skyband (one scan + :func:`_verify_candidates`,
+       as in :func:`skyband`): if p has >= k dominators, each dominator q has
        dominated(p) ⊂ dominated(q) ∪ {p} (transitivity), i.e. a strictly
        higher score, so p cannot be in the top-k;
     2. exact scores: broadcast the candidate dim-matrix and count, per
@@ -1095,71 +955,25 @@ def top_dominating(
     # at s23's shape.)
     #
     # Candidates = the k-skyband, consumed DIRECTLY from the shared
-    # phase-1 thinning + one driver verify (round 17): the former
+    # phase-1 thinning + the shared verify (round 17): the former
     # ``skyband()`` call materialized the band as a local relation that
     # this operator immediately re-prepped and re-collected — one extra
     # job plus a full Spark->driver->Spark->driver round trip per call
     # for data already in hand.  Identical candidate set: same local
-    # kernel, same driver-side dominator-count verify (B1/B3).
-    from .skyline_kernel import _count_dominators_vs
-
+    # kernel, same dominator-count verify (B1/B3).
     phase1 = _persist(
         _fanout(prepped).mapInPandas(
             _skyband_local_fn(prep_cols, k), schema=prepped.schema
         )
     )
-    n_band = phase1.count()
-    if n_band <= _DRIVER_VERIFY_MAX_ROWS:
-        # driver verify — the same gate skyband uses for this kernel (the
-        # O(n_band^2) count is single-threaded here; round-17 review
-        # caught the first cut of this refactor running it for unions up
-        # to _VERIFY_MAX_ROWS, 24x past the gate)
-        union_tbl = phase1.toArrow()  # cached — the count materialized it
-        if union_tbl.num_rows:
-            union_arr = np.ascontiguousarray(
-                union_tbl.select(prep_cols).to_pandas().to_numpy(dtype=np.float64)
-            )
-            counts = _count_dominators_vs(union_arr, union_arr)
-            keep = counts < k
-            if keep.all():
-                cand_tbl, cand_arr = union_tbl, union_arr
-            else:
-                import pyarrow as pa
-
-                cand_tbl = union_tbl.filter(pa.array(keep))
-                cand_arr = np.ascontiguousarray(union_arr[keep])
-        else:
-            cand_tbl = union_tbl
-    elif n_band <= _VERIFY_MAX_ROWS:
-        # distributed broadcast-verify (skyband's mid path): the counting
-        # block parallelizes across the cached union's partitions
-        cand_pdf = phase1.select(*prep_cols).toPandas()
-        union_arr = np.ascontiguousarray(cand_pdf.to_numpy(dtype=np.float64))
-        bc_u = spark.sparkContext.broadcast(union_arr)
-
-        def band_verify(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            ref = bc_u.value
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                pts = pdf[prep_cols].to_numpy(dtype=np.float64)
-                out = pdf.loc[_count_dominators_vs(pts, ref) < k]
-                if not out.empty:
-                    yield out
-
-        cand_tbl = phase1.mapInPandas(band_verify, schema=phase1.schema).toArrow()
-        cand_arr = np.ascontiguousarray(
-            cand_tbl.select(prep_cols).to_pandas().to_numpy(dtype=np.float64)
-        )
-    else:  # oversized union: the chunked counting pipeline, then collect
-        band = _chunked_skyband_verify(
-            phase1, prep_cols, k, "n_dominators", df.columns, n_band
-        )
-        band_prepped, _ = _prep(band.drop("n_dominators"), dims)
-        cand_tbl = band_prepped.toArrow()
-        cand_arr = np.ascontiguousarray(
-            cand_tbl.select(prep_cols).to_pandas().to_numpy(dtype=np.float64)
-        )
+    band, cand_tbl = _verify_candidates(
+        phase1, phase1.count(), prep_cols, _DominatorCount, k
+    )
+    if cand_tbl is None:
+        cand_tbl = band.toArrow()
+    cand_arr = np.ascontiguousarray(
+        cand_tbl.select(prep_cols).to_pandas().to_numpy(dtype=np.float64)
+    )
     if cand_tbl.num_rows == 0:  # empty input -> empty result with the contract schema
         empty = prepped.select(*out_cols).limit(0)
         return empty.select(
@@ -1215,7 +1029,7 @@ def top_dominating(
 
     # the SAME collected Arrow table feeds both the broadcast matrix and
     # this keyed frame, so __cand_idx alignment is positional by
-    # construction (band size is bounded by the skyband's verify guard)
+    # construction
     cand_keyed = _keyed_candidates(spark, cand_tbl)
     joined = cand_keyed.join(F.broadcast(totals), "__cand_idx")
     ties = list(tie_cols) if tie_cols else prep_cols
@@ -1875,29 +1689,18 @@ def skycube(
 
     # Full-space skyline with the collected rows kept: the keysets below
     # need the full skyline's dim values driver-side anyway, so when the
-    # phase-1 survivor set is bounded, finish the merge on the driver
-    # (same kernel, see _driver_verify_local) and reuse ONE collect for
-    # the result rows, n_full, AND the keyset source — the former
-    # skyline() + count() + toPandas() sequence paid three extra jobs
-    # for data already in hand.
-    full_tbl = None
+    # verify runs on the driver ONE collect serves the result rows,
+    # n_full, AND the keyset source — the former skyline() + count() +
+    # toPandas() sequence paid three extra jobs for data already in hand.
     local = _local_skyline_iter(prep_cols)
     phase1 = _persist(_fanout(prepped).mapInPandas(local, schema=prepped.schema))
-    n_surv = phase1.count()
-    if n_surv <= _DRIVER_VERIFY_MAX_ROWS:
-        import pyarrow as pa
-
-        tbl = phase1.toArrow()
-        arr = np.ascontiguousarray(
-            tbl.select(prep_cols).to_pandas().to_numpy(dtype=np.float64)
-        )
-        mask = skyline_mask(arr)
-        full_tbl = tbl if mask.all() else tbl.filter(pa.array(mask))
-        full = spark.createDataFrame(full_tbl.select(out_cols))
-        n_full = full_tbl.num_rows
-    else:
-        full = _persist(_merge_survivors(phase1, prep_cols).select(*out_cols))
+    full, full_tbl = _verify_candidates(phase1, phase1.count(), prep_cols, _Dominance)
+    if full_tbl is None:
+        full = _persist(full.select(*out_cols))
         n_full = full.count()
+    else:
+        full = full.select(*out_cols)
+        n_full = full_tbl.num_rows
     out = full.select(F.lit(label(names)).alias(label_col), *df.columns)
     if len(nd) < 2:
         return out
@@ -2029,27 +1832,6 @@ def skycube(
         )
         out = out.unionByName(big.select(label_col, *out_cols))
     return out
-
-
-def _scatter_obj_counts(
-    acc: np.ndarray, oc: np.ndarray, le: np.ndarray, tmp: np.ndarray, ms: int
-) -> None:
-    """``acc[oc, ms:ms+a] += le.T`` without ``np.add.at``: the ufunc
-    scatter walks 6.6M elements one at a time (~0.75 s per warm s30,
-    round-16 profile).  Sorting the scanned rows by object id and
-    summing each group with ``np.add.reduceat`` (C-contiguous segment
-    sums, int64 accumulator) does the same math at memory speed; group
-    leaders are unique, so the final fancy-row add never collides.
-    ``tmp`` is the caller's scratch plane (holds the column-permuted
-    copy of ``le``)."""
-    a, b = le.shape
-    order = np.argsort(oc, kind="stable")
-    so = oc[order]
-    starts = np.flatnonzero(np.r_[True, so[1:] != so[:-1]])
-    perm = tmp[:a, :b]
-    np.take(le, order, axis=1, out=perm)
-    sums = np.add.reduceat(perm, starts, axis=1, dtype=np.int64)
-    acc[so[starts], ms : ms + a] += sums.T
 
 
 def prob_skyline(
@@ -2220,7 +2002,13 @@ def prob_skyline(
     # count block is bounded before each phase; past the bound the
     # distributed path below runs unchanged.
     if driver_small:
-        from .skyline_kernel import _ChunkScratch, _M_CHUNK, _SKYBAND_CHUNK, skyband_mask
+        from .skyline_kernel import (
+            _ChunkScratch,
+            _M_CHUNK,
+            _SKYBAND_CHUNK,
+            count_obj_dominators,
+            skyband_mask,
+        )
 
         pts = np.ascontiguousarray(
             tbl.select(prep_cols).to_pandas().to_numpy(dtype=np.float64)
@@ -2233,35 +2021,15 @@ def prob_skyline(
         )
 
         def _probs_for(cand_sel: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-            # same chunked counting block as the distributed scan's fn(),
-            # run once over the collected matrix; same own-object zeroing,
+            # the distributed scan's counting block, run once over the
+            # collected matrix; same own-object zeroing,
             # same factor fold (min factor <= 0 -> 0, else exp(sum ln) —
             # float-order noise absorbed by the 6-dp contract either way)
             cand = np.ascontiguousarray(pts[cand_sel])
             mm = cand.shape[0]
             acc = np.zeros((n_obj, mm), dtype=np.int64)
-            d_dims = cand.shape[1]
             scratch = _ChunkScratch(min(mm, _M_CHUNK), _SKYBAND_CHUNK)
-            le_p, eq_p, tmp_p = scratch.dom, scratch.neq, scratch.tmp
-            for ps in range(0, pts.shape[0], _SKYBAND_CHUNK):
-                pc = pts[ps : ps + _SKYBAND_CHUNK]
-                oc = oidx[ps : ps + _SKYBAND_CHUNK]
-                for ms in range(0, mm, _M_CHUNK):
-                    cc = cand[ms : ms + _M_CHUNK]
-                    a, b = cc.shape[0], pc.shape[0]
-                    le, eq, tmp = le_p[:a, :b], eq_p[:a, :b], tmp_p[:a, :b]
-                    le[:] = True
-                    eq[:] = True
-                    for j in range(d_dims):
-                        cj = cc[:, j][:, None]
-                        pj = pc[:, j][None, :]
-                        np.less_equal(pj, cj, out=tmp)
-                        np.logical_and(le, tmp, out=le)
-                        np.equal(pj, cj, out=tmp)
-                        np.logical_and(eq, tmp, out=eq)
-                    np.logical_not(eq, out=eq)
-                    np.logical_and(le, eq, out=le)
-                    _scatter_obj_counts(acc, oc, le, tmp, ms)
+            count_obj_dominators(acc, pts, oidx, cand, scratch)
             own = oidx[cand_sel]
             acc[own, np.arange(mm)] = 0
             nzo, nzc = np.nonzero(acc)
@@ -2326,17 +2094,20 @@ def prob_skyline(
         bc_cand = spark.sparkContext.broadcast(cand_arr)
         bc_own = spark.sparkContext.broadcast(own_idx)
         bc_map = spark.sparkContext.broadcast(obj_map)
-        from .skyline_kernel import _ChunkScratch, _M_CHUNK, _SKYBAND_CHUNK
+        from .skyline_kernel import (
+            _ChunkScratch,
+            _M_CHUNK,
+            _SKYBAND_CHUNK,
+            count_obj_dominators,
+        )
 
         def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             cand = bc_cand.value
             omap = bc_map.value
             acc = np.zeros((len(omap), cand.shape[0]), dtype=np.int64)
-            d = cand.shape[1]
             # per-TASK scratch planes (round-15 allocator-churn
             # discipline)
             scratch = _ChunkScratch(min(cand.shape[0], _M_CHUNK), _SKYBAND_CHUNK)
-            le_p, eq_p, tmp_p = scratch.dom, scratch.neq, scratch.tmp
             for pdf in batches:
                 if pdf.empty:
                     continue
@@ -2346,26 +2117,7 @@ def prob_skyline(
                     .merge(omap, on=obj_cols, how="left")["__obj_idx"]
                     .to_numpy(dtype=np.int64)
                 )
-                for ps in range(0, pts.shape[0], _SKYBAND_CHUNK):
-                    pc = pts[ps : ps + _SKYBAND_CHUNK]
-                    oc = oidx[ps : ps + _SKYBAND_CHUNK]
-                    for ms in range(0, cand.shape[0], _M_CHUNK):
-                        cc = cand[ms : ms + _M_CHUNK]
-                        a, b = cc.shape[0], pc.shape[0]
-                        le, eq, tmp = le_p[:a, :b], eq_p[:a, :b], tmp_p[:a, :b]
-                        le[:] = True
-                        eq[:] = True
-                        for j in range(d):
-                            cj = cc[:, j][:, None]
-                            pj = pc[:, j][None, :]
-                            # scanned point <= candidate
-                            np.less_equal(pj, cj, out=tmp)
-                            np.logical_and(le, tmp, out=le)
-                            np.equal(pj, cj, out=tmp)
-                            np.logical_and(eq, tmp, out=eq)
-                        np.logical_not(eq, out=eq)
-                        np.logical_and(le, eq, out=le)
-                        _scatter_obj_counts(acc, oc, le, tmp, ms)
+                count_obj_dominators(acc, pts, oidx, cand, scratch)
             # the own-object exclusion ("product over OTHER objects")
             # zeroes at the source — the former post-sum __own_idx
             # anti-filter needed the candidates re-broadcast as a keyed

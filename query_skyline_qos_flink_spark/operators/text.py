@@ -76,23 +76,6 @@ def tokens(col: Column | str) -> Column:
     return F.filter(F.split(F.lower(col), TOKEN_RE), lambda x: x != "")
 
 
-def word_shingles(toks: Column | str, k: int = 3) -> Column:
-    """Distinct k-word shingles of a token array (empty if < k tokens).
-    Accepts a SQL fragment naming/producing the array (preferred) or a
-    Column."""
-    if isinstance(toks, str):
-        return F.expr(word_shingles_sql(toks, k))
-    return F.when(
-        F.size(toks) >= k,
-        F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(0), F.size(toks) - k),
-                lambda i: F.concat_ws(" ", F.slice(toks, i + 1, k)),
-            )
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-
-
 _STOP_ARR_SQL = "array(" + ", ".join(f"'{w}'" for w in STOPWORDS) + ")"
 
 

@@ -75,10 +75,3 @@ def points(
         raise ValueError(f"unknown distribution {distribution!r}")
 
     return df.select("id", *cols)
-
-
-def as_values_array(df: DataFrame) -> DataFrame:
-    """Collapse v0..vk columns into the reference's ``values array<double>``
-    shape (``ServiceTuple.java:27``)."""
-    vcols = [c for c in df.columns if c.startswith("v")]
-    return df.select("id", F.array(*vcols).alias("values"))

@@ -193,8 +193,9 @@ def test_kdominant_kernel_properties(rows, k):
 @settings(max_examples=50, deadline=None)
 @given(points_strategy, st.integers(min_value=1, max_value=6))
 def test_chunked_dominated_filter_equals_single_pass(rows, n_chunks):
-    """The fact _chunked_broadcast_verify (operators/skyline.py) relies
-    on: progressively filtering candidates against an arbitrary partition
+    """The fact the chunked verify tier (operators/skyline.py,
+    ``_verify_candidates`` with the ``_Dominance`` kernel) relies on:
+    progressively filtering candidates against an arbitrary partition
     of the reference set (logical AND across chunks) equals one pass
     against the whole reference — strict dominance is a set property."""
     from query_skyline_qos_flink_spark.operators.skyline_kernel import (
@@ -224,8 +225,9 @@ def test_chunked_dominated_filter_equals_single_pass(rows, n_chunks):
 @settings(max_examples=50, deadline=None)
 @given(points_strategy, st.integers(min_value=1, max_value=6))
 def test_dominator_counts_additive_over_reference_partition(rows, n_chunks):
-    """The fact _chunked_skyband_verify relies on: dominator counts sum
-    exactly across any partition of the reference set."""
+    """The fact the chunked verify tier relies on for the
+    ``_DominatorCount`` kernel: dominator counts sum exactly across any
+    partition of the reference set."""
     from query_skyline_qos_flink_spark.operators.skyline_kernel import (
         _count_dominators_vs,
     )

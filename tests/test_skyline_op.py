@@ -895,7 +895,8 @@ def test_uniform_chunks_bounded_on_all_duplicates(spark):
 
 
 def test_broadcast_verify_fast_paths_requalify_per_batch(spark):
-    """r10 ADVICE (medium): ``_broadcast_verify`` decided the f32 and
+    """r10 ADVICE (medium): the broadcast verify pass (now
+    ``_verify_pass`` with the ``_Dominance`` kernel) decided the f32 and
     exact-sum fast paths from ``ref`` ALONE; with an external reference
     (chunked merge, verify probes) a qualifying ref against a
     non-qualifying candidate silently corrupted the comparison.  Both
@@ -909,7 +910,7 @@ def test_broadcast_verify_fast_paths_requalify_per_batch(spark):
     r = float(np.float32(0.1))
     ref = spark.createDataFrame([(r, 1.0)], "a double, b double")
     cand = spark.createDataFrame([(0.1, 2.0)], "a double, b double")
-    assert len(sky._broadcast_verify(cand, ["a", "b"], ref=ref).collect()) == 1
+    assert len(sky._verify_pass(cand, ["a", "b"], sky._Dominance, 1, ref).collect()) == 1
 
     # exact-sum direction: integral ref (4, 0) strictly dominates
     # candidate (4, 1e-45), but their COMPUTED f64 sums tie (4.0 + 1e-45
@@ -917,39 +918,49 @@ def test_broadcast_verify_fast_paths_requalify_per_batch(spark):
     # sums are exact) would keep the dominated row.
     ref2 = spark.createDataFrame([(4.0, 0.0)], "a double, b double")
     cand2 = spark.createDataFrame([(4.0, 1e-45)], "a double, b double")
-    assert len(sky._broadcast_verify(cand2, ["a", "b"], ref=ref2).collect()) == 0
+    assert len(sky._verify_pass(cand2, ["a", "b"], sky._Dominance, 1, ref2).collect()) == 0
 
 
-def test_chunked_skyband_counts_match_bounded_path(spark):
+def test_chunked_skyband_counts_match_bounded_path(spark, monkeypatch):
     """Candidate unions past _VERIFY_MAX_ROWS take the chunked counting
-    pipeline (dominator counts are additive over a partition of the
-    union; rows early-drop at running count >= k).  A forced tiny bound
-    must reproduce the bounded path's band AND exact dominator counts
-    row for row; a union past _TREE_FANOUT x bound still raises."""
-    import pytest
-
+    tier (dominator counts are additive over a partition of the union;
+    rows early-drop at running count >= k).  A forced tiny bound must
+    reproduce the bounded path's band AND exact dominator counts row for
+    row — also past _TREE_FANOUT x bound, where the running frame is
+    checkpointed every _TREE_FANOUT passes instead of raising."""
     from query_skyline_qos_flink_spark.operators import skyline as sky
     from query_skyline_qos_flink_spark.sources.generators import points
 
     df = points(spark, 60_000, 3, "anti_correlated", domain=10000, seed=11)
     full = sorted(tuple(r) for r in sky.skyband(df, ["v0", "v1", "v2"], k=3).collect())
-    old = sky._VERIFY_MAX_ROWS
-    try:
-        sky._VERIFY_MAX_ROWS = 1000  # union ~24.7k -> 25 chunks
-        chunked = sorted(
-            tuple(r) for r in sky.skyband(df, ["v0", "v1", "v2"], k=3).collect()
-        )
-    finally:
-        sky._VERIFY_MAX_ROWS = old
-    assert len(full) > 1000  # the forced bound actually engaged the path
+    # the union (~12k rows on 4 cores, ~25k on 32) is under the driver
+    # gate, so close that tier too or the chunked tier never runs
+    monkeypatch.setattr(sky, "_DRIVER_VERIFY_MAX_ROWS", -1)
+    chunks = []
+    chunk_col = sky._uniform_chunk_col
+    monkeypatch.setattr(
+        sky, "_uniform_chunk_col", lambda n: chunks.append(n) or chunk_col(n)
+    )
+    monkeypatch.setattr(sky, "_VERIFY_MAX_ROWS", 1000)  # 12k-25k rows -> 12-25 chunks
+    chunked = sorted(
+        tuple(r) for r in sky.skyband(df, ["v0", "v1", "v2"], k=3).collect()
+    )
+    assert len(full) > 1000
+    assert chunks and chunks[0] > 8  # the forced bound engaged the chunked tier
     assert chunked == full  # membership AND counts identical
 
-    try:
-        sky._VERIFY_MAX_ROWS = 10  # fanout cap: 32 x 10 << union
-        with pytest.raises(ValueError, match="candidate union"):
-            sky.skyband(df, ["v0", "v1", "v2"], k=3).count()
-    finally:
-        sky._VERIFY_MAX_ROWS = old
+    # past a 4 x 1000 fanout cap: checkpoints every 4 passes, no raise
+    rotations = []
+    rotate = sky.checkpoint_rotate
+    monkeypatch.setattr(
+        sky, "checkpoint_rotate", lambda df, prev: rotations.append(1) or rotate(df, prev)
+    )
+    monkeypatch.setattr(sky, "_TREE_FANOUT", 4)
+    rotated = sorted(
+        tuple(r) for r in sky.skyband(df, ["v0", "v1", "v2"], k=3).collect()
+    )
+    assert len(rotations) == (chunks[0] - 1) // 4
+    assert rotated == full
 
 
 def test_partition_stats_scan_side_prune_route_parity(spark, monkeypatch):
@@ -1020,10 +1031,13 @@ def test_skyline_layers_single_pass_matches_peel_fallback(spark):
 
 
 def test_driver_verify_gate_parity(spark, monkeypatch):
-    """Round 16: candidate sets at or below _DRIVER_VERIFY_MAX_ROWS finish
-    driver-side (same kernels, local-relation result).  Both sides of the
-    gate must produce identical rows for skyline AND skyband — including
-    duplicates, ties, max dims and NaN policy."""
+    """Every tier of the verify planner (``_verify_candidates``) —
+    driver, broadcast and chunked, each forced by the gate constants —
+    must reproduce the default run row for row for skyline, skyband,
+    top_dominating and skycube, including duplicates, ties, max dims and
+    the NaN policy.  Spies prove each forced tier engaged; the reduced
+    _TREE_FANOUT makes the chunked tier's periodic checkpoint run.
+    top_dominating's chunked case also runs an all-duplicates corpus."""
     import numpy as np
     import pandas as pd
 
@@ -1042,21 +1056,62 @@ def test_driver_verify_gate_parity(spark, monkeypatch):
     pdf.loc[rng.random(n) < 0.04, "y"] = np.nan
     df = spark.createDataFrame(pdf).repartition(7)
     dims = [("x", "min"), ("y", "max"), ("z", "min")]
+    dup = spark.createDataFrame(
+        [(i, 1.0, 2.0) for i in range(120)], "rid long, a double, b double"
+    ).repartition(3)
 
-    sky_driver = sorted(tuple(r) for r in sky.skyline(df, dims).collect())
-    band_driver = sorted(
-        tuple(r) for r in sky.skyband(df, dims, k=3).collect()
-    )
-    # driver path actually engaged at the default gate for this size
+    ops = {
+        "skyline": lambda: sky.skyline(df, dims),
+        "skyband": lambda: sky.skyband(df, dims, k=3),
+        "topdom": lambda: sky.top_dominating(df, dims, k=3, tie_cols=["rid"]),
+        "skycube": lambda: sky.skycube(df, dims),
+        "topdom_dup": lambda: sky.top_dominating(dup, ["a", "b"], k=3, tie_cols=["rid"]),
+    }
+    calls = {"pass": 0, "chunk": 0, "rotate": 0}
+
+    def runs(names):
+        """{op: (rows, spy calls during that op)}"""
+        out = {}
+        for op in names:
+            for key in calls:
+                calls[key] = 0
+            out[op] = (sorted(tuple(r) for r in ops[op]().collect()), dict(calls))
+        return out
+
+    default = runs(ops)
+    assert len(default["topdom_dup"][0]) == 3
+    # the default gates put every candidate set of this corpus on the
+    # driver tier, so the broadcast and chunked runs are real crossings
     assert n <= sky._DRIVER_VERIFY_MAX_ROWS
 
-    monkeypatch.setattr(sky, "_DRIVER_VERIFY_MAX_ROWS", 0)
-    sky_dist = sorted(tuple(r) for r in sky.skyline(df, dims).collect())
-    band_dist = sorted(
-        tuple(r) for r in sky.skyband(df, dims, k=3).collect()
-    )
-    assert sky_driver == sky_dist
-    assert band_driver == band_dist
+    def spy(name, fn):
+        def wrapped(*args, **kwargs):
+            calls[name] += 1
+            return fn(*args, **kwargs)
+
+        return wrapped
+
+    monkeypatch.setattr(sky, "_verify_pass", spy("pass", sky._verify_pass))
+    monkeypatch.setattr(sky, "_uniform_chunk_col", spy("chunk", sky._uniform_chunk_col))
+    monkeypatch.setattr(sky, "checkpoint_rotate", spy("rotate", sky.checkpoint_rotate))
+    tiers = {
+        "driver": {"_DRIVER_VERIFY_MAX_ROWS": 10**9},
+        "broadcast": {"_DRIVER_VERIFY_MAX_ROWS": -1},
+        # skyline's 82 phase-1 survivors tree-merge to 36 (> 20), the
+        # 241-row skyband union splits into 13 chunks (3 checkpoints)
+        "chunked": {"_DRIVER_VERIFY_MAX_ROWS": -1, "_VERIFY_MAX_ROWS": 20, "_TREE_FANOUT": 4},
+    }
+    for tier, gates in tiers.items():
+        with monkeypatch.context() as m:
+            for name, value in gates.items():
+                m.setattr(sky, name, value)
+            forced = runs([op for op in ops if op != "topdom_dup" or tier == "chunked"])
+        for op, (rows, seen) in forced.items():
+            assert rows == default[op][0], (tier, op)
+            assert (seen["pass"] > 0) == (tier != "driver"), (tier, op, seen)
+            assert (seen["chunk"] > 0) == (tier == "chunked"), (tier, op, seen)
+        rotations = sum(seen["rotate"] for _, seen in forced.values())
+        assert (rotations > 0) == (tier == "chunked"), (tier, rotations)
 
 
 def test_whole_input_driver_path_parity(spark, monkeypatch):
